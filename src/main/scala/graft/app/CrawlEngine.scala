@@ -59,9 +59,9 @@ final class CrawlEngine(
       * Seen rows then carry the round they were committed in
       * (`seen_round`), and the gate is the deletable cuckoo filter read
       * from the CHECKPOINTED `seen_sketch` snapshot and maintained
-      * incrementally at each commit ([[graft.seen.UrlSeen.updateCuckooFilters]]
+      * incrementally at each commit ([[graft.seen.SketchHandle.update]]
       * — deletes ∝ the stamps crossing the boundary this round, inserts =
-      * the round's fetched hashes; [[graft.seen.UrlSeen.antiJoinWithCuckoo]]
+      * the round's fetched hashes; [[graft.seen.SketchHandle.gate]]
       * computes frontier ANTI (seen ∖ expired), still exact end-to-end).
       * Steady-state per-round work is bounded by the window, never the
       * seen history. None (default) = the Bloom gate, single-column seen
@@ -90,7 +90,7 @@ final class CrawlEngine(
   val barcodeSeenTable = new SnapshotTable(spark, s"$stateDir/barcode_seen")
   /** Checkpointed cuckoo-filter state for the re-crawl window (J4b): one row
     * per bucket, `(__bucket, __filter)`, maintained INCREMENTALLY per round
-    * (`UrlSeen.updateCuckooFilters` — deletes ∝ the stamps crossing the
+    * (`SketchHandle.update` — deletes ∝ the stamps crossing the
     * expiry boundary this round, inserts = this round's fetched hashes)
     * instead of rebuilt from the full seen history. The manifest lineage
     * carries the sketch geometry (`sketch:b=..;cap=..;n=..`). */
@@ -301,7 +301,7 @@ final class CrawlEngine(
     //    so no-false-negative vs exactSeen holds unconditionally);
     //  - the filters come from the seen_sketch snapshot the checkpoint
     //    points at and are maintained incrementally at commit time
-    //    (UrlSeen.updateCuckooFilters); a rebuild — from the recent window
+    //    (SketchHandle.update); a rebuild — from the recent window
     //    only, never the full history — happens when the sketch is absent
     //    or its cumulative inserts outgrew capacity (stale copies from
     //    skipped/duplicate stamps are shed there; they only ever cost

@@ -147,7 +147,7 @@ object Scheduler {
       /** J4b re-crawl window: when set, REPLACES the Bloom seen gate. Called
         * with the narrow frontier projection; must return its unseen subset
         * (the engine passes a closure over its checkpointed cuckoo filters —
-        * UrlSeen.antiJoinWithCuckoo against seen ∖ expired). */
+        * SketchHandle.gate against seen ∖ expired). */
       seenGate: Option[DataFrame => DataFrame] = None): (DataFrame, DataFrame) = {
     import graft.seen.UrlSeen
     import org.apache.spark.sql.expressions.Window

@@ -38,9 +38,10 @@ import org.apache.spark.storage.StorageLevel
   * same arrangement with `preservesPartitioning` maps, so partition index i
   * holds exactly the buckets with murmur3(bucket) % buckets == i on both
   * sides of every zip. Exactness: the gate is the same two-stage contract as
-  * `UrlSeen.gateWithSketches` (sketch-negatives definitely new;
+  * the Bloom gates in `UrlSeen` (sketch-negatives definitely new;
   * sketch-positives verified by the exact anti-join), asserted end-to-end by
-  * CrawlEngineRecrawlSpec.
+  * CrawlEngineRecrawlSpec. This is the one cuckoo path: the engine's
+  * re-crawl gate and `UrlSeen.antiJoinCuckoo` both run it.
   */
 final case class SketchHandle(
     rdd: RDD[(Int, Array[Byte])], buckets: Int, capacity: Long) {
@@ -76,9 +77,9 @@ object SketchHandle {
   }
 
   /** Gate `frontier` against the pinned filters, then the exact left-anti
-    * verify join of sketch-positives against `exactSeen` — identical result
-    * to `UrlSeen.antiJoinWithCuckoo` with the same filters, with ZERO sketch
-    * bytes crossing an exchange. */
+    * verify join of sketch-positives against `exactSeen` — result ==
+    * frontier LEFT ANTI exactSeen whenever the filters hold every key of
+    * exactSeen, with ZERO sketch bytes crossing an exchange. */
   def gate(frontier: DataFrame, handle: SketchHandle, exactSeen: DataFrame,
       hashCol: String,
       scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged): DataFrame = {
@@ -120,9 +121,10 @@ object SketchHandle {
     * hashes and insert `inserts` hashes IN PLACE against the pinned filters.
     * The lists (∝ |deletes| + |inserts|, i.e. the window) are aggregated and
     * EXPLICITLY repartitioned to the handle's bucket arrangement, then
-    * zipped — the filter binaries never move. Same caller contract as
-    * `UrlSeen.updateCuckooFilters` (deletes must have been inserted); a
-    * bucket new to the hash space gets a fresh filter sized `capacity`.
+    * zipped — the filter binaries never move. Caller contract: every
+    * delete hash was actually inserted (semi-join against seen first, as
+    * `UrlSeen.antiJoinCuckoo` does); a bucket new to the hash space gets a
+    * fresh filter sized `capacity`.
     * Returns a NEW pinned generation (caller manages unpersist of the old
     * one — untouched buckets share no state, the bytes are copied). */
   def update(handle: SketchHandle, hashCol: String,
@@ -173,7 +175,7 @@ object SketchHandle {
       }
       // buckets new to the hash space: no filter row yet — fresh filter for
       // inserts; deletes here violate the deletes-subset-of-inserted
-      // contract and fail loud (same stance as UrlSeen.updateCuckooFilters)
+      // contract and fail loud
       byBucket.forEach { (k, v) =>
         if (v._1 != null && v._1.nonEmpty)
           throw new IllegalStateException(

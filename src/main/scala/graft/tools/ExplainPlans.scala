@@ -94,20 +94,15 @@ object ExplainPlans {
 
     // 4b. cuckoo seen gate with the re-crawl window (J4b)
     dump("cuckoo URL-seen gate + re-crawl window (J4b)",
-      "Expect (r06 broadcast-probe regime, expectedSeen <= the partitioned " +
-        "threshold): the expired window semi-joins against seen " +
-        "(delete-safety) BEFORE any filter delete; the per-bucket filter " +
-        "build is one repartition + ObjectHashAggregate (CuckooAgg); the " +
-        "in-place update's window-key lists repartition to the filters' " +
-        "HashPartitioning(__bucket, buckets) so NO exchange moves the filter " +
-        "binaries (ExplainCuckooUpdate audits the update subplan in " +
-        "isolation); the GATE is a codegen'd sketch_any_probe filter over " +
-        "the broadcast per-bucket map — NO CoGroup/AppendColumns/" +
-        "MapPartitions object boundary, zero gate-side exchanges — and only " +
-        "sketch-positives reach the exact LeftAnti verify join. (Above the " +
-        "threshold the per-bucket cogroup keeps the executor memory bound; " +
-        "the ENGINE at that scale uses the executor-pinned zip gate, " +
-        "SketchHandle.)",
+      "Expect (the engine's pinned-sketch path, SketchHandle): the expired " +
+        "window semi-joins against seen (delete-safety) BEFORE any filter " +
+        "delete; the per-bucket filter build (one repartition + " +
+        "ObjectHashAggregate, CuckooAgg), the in-place delete and the gate " +
+        "probe run inside RDD zipPartitions over the pinned sketch, so " +
+        "explain shows them only as an ExistingRDD scan of the flagged " +
+        "frontier; the visible plan is that scan split into the " +
+        "definitely-new and candidate branches, with only sketch-positives " +
+        "reaching the exact LeftAnti verify join against seen minus expired.",
       {
         val cFrontier = frontier.select("url_hash", "url", "host")
         val cSeen = cFrontier.filter(col("url_hash") % 3 === 0).select("url_hash")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.gen.Synthetic
-import graft.seen.{CuckooAgg, CuckooFilter, UrlSeen}
+import graft.seen.{CuckooAgg, CuckooFilter, SketchHandle, UrlSeen}
 
 class CuckooFilterSpec extends SparkTestBase {
 
@@ -138,16 +138,19 @@ class CuckooFilterSpec extends SparkTestBase {
     val expired = seen.filter(col("url_hash") % 9 === 0)
     val crawled = frontier.filter(col("url_hash") % 3 =!= 0 && col("url_hash") % 5 === 0)
       .select("url_hash").distinct()
-    val updated = UrlSeen.updateCuckooFilters(filters, "url_hash", b, perBucket,
+    val pinned = SketchHandle.pin(filters, b, perBucket)
+    val updated = SketchHandle.update(pinned, "url_hash",
       deletes = Some(expired), inserts = Some(crawled))
     val evolved = seen.join(expired, Seq("url_hash"), "left_anti").unionByName(crawled)
-    val viaCuckoo = UrlSeen.antiJoinWithCuckoo(frontier, updated, evolved, "url_hash", b)
-      .select("url_hash").as[Long].collect().sorted.toSeq
-    val exact = UrlSeen.exactAntiJoin(frontier, evolved, "url_hash")
-      .select("url_hash").as[Long].collect().sorted.toSeq
-    assert(viaCuckoo == exact)
-    // the insert side must actually bite: crawled rows are gated out now
-    assert(exact.toSet.intersect(crawled.as[Long].collect().toSet).isEmpty)
+    try {
+      val viaCuckoo = SketchHandle.gate(frontier, updated, evolved, "url_hash")
+        .select("url_hash").as[Long].collect().sorted.toSeq
+      val exact = UrlSeen.exactAntiJoin(frontier, evolved, "url_hash")
+        .select("url_hash").as[Long].collect().sorted.toSeq
+      assert(viaCuckoo == exact)
+      // the insert side must actually bite: crawled rows are gated out now
+      assert(exact.toSet.intersect(crawled.as[Long].collect().toSet).isEmpty)
+    } finally { pinned.unpersist(); updated.unpersist() }
     spark.catalog.clearCache()
   }
 

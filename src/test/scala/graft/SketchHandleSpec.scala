@@ -3,18 +3,18 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.seen.{CuckooFilter, SketchHandle, UrlSeen}
 
-/** Focused spec for the r06 executor-pinned sketch transport (the engine's
-  * re-crawl gate internals changed from the cogroup to zipPartitions
-  * co-location): gate identity vs the exact anti-join AND vs the cogroup
-  * transport, update identity vs UrlSeen.updateCuckooFilters, new-bucket
-  * inserts, the loud delete-contract failure, and zip alignment at a bucket
-  * count that does not divide the parallelism. */
+/** Focused spec for the executor-pinned sketch transport (the one cuckoo
+  * path: the engine's re-crawl gate and UrlSeen.antiJoinCuckoo): gate
+  * identity vs the exact anti-join before and after an in-place update,
+  * insert membership, new-bucket inserts, the loud delete-contract failure,
+  * and zip alignment at a bucket count that does not divide the
+  * parallelism. */
 class SketchHandleSpec extends SparkTestBase {
 
   private def hashed(from: Long, to: Long) =
     spark.range(from, to).select(xxhash64(col("id")).as("url_hash"))
 
-  test("pinned zip gate == exact anti-join == cogroup gate (same filters)") {
+  test("pinned zip gate == exact anti-join (same filters)") {
     import spark.implicits._
     val seen = hashed(0, 3000)
     val frontier = hashed(2000, 5000)
@@ -25,48 +25,43 @@ class SketchHandleSpec extends SparkTestBase {
     try {
       val viaZip = SketchHandle.gate(frontier, handle, seen, "url_hash")
         .select("url_hash").as[Long].collect().sorted.toSeq
-      val viaCogroup = UrlSeen.antiJoinWithCuckoo(frontier, filters, seen, "url_hash", b)
-        .select("url_hash").as[Long].collect().sorted.toSeq
       val exact = UrlSeen.exactAntiJoin(frontier, seen, "url_hash")
         .select("url_hash").as[Long].collect().sorted.toSeq
       assert(viaZip == exact)
-      assert(viaCogroup == exact)
       // gate output keeps all frontier columns (minus the internal bucket)
       assert(SketchHandle.gate(frontier, handle, seen, "url_hash").columns.toSeq ==
         Seq("url_hash", "url"))
     } finally handle.unpersist()
   }
 
-  test("zip update == updateCuckooFilters: deletes + inserts + new buckets") {
+  test("zip update == exact anti-join on (seen minus deletes) + inserts, new bucket") {
     import spark.implicits._
-    val seen = hashed(0, 2000)
     val b = 5
-    val cap = 2000L / 5
-    val filters = UrlSeen.buildCuckooFilters(seen, "url_hash", 2000, b)
-    val deletes = hashed(0, 300)            // subset of inserted
-    val inserts = hashed(5000, 5400)        // fresh keys, may open new buckets
-    val handle = SketchHandle.pin(filters, b, cap)
+    // bucket 4 has no filter row until the inserts open it
+    def offBucket4(df: org.apache.spark.sql.DataFrame) =
+      df.filter(pmod(col("url_hash"), lit(b)) =!= 4)
+    val seen = offBucket4(hashed(0, 2000))
+    val deletes = offBucket4(hashed(0, 300)) // subset of inserted
+    val inserts = hashed(5000, 5400)         // fresh keys, open bucket 4
+    val handle = SketchHandle.pin(UrlSeen.buildCuckooFilters(seen, "url_hash", 2000, b), b, 2000L / b)
     val updated = SketchHandle.update(handle, "url_hash",
       deletes = Some(deletes), inserts = Some(inserts))
     try {
-      val viaDf = UrlSeen.updateCuckooFilters(filters, "url_hash", b, cap,
-          deletes = Some(deletes), inserts = Some(inserts))
-        .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-      val viaZip = updated.rdd.collect().toMap
-      assert(viaZip.keySet == viaDf.keySet)
-      // membership-equivalent per bucket over every touched key (byte
-      // equality is not guaranteed — partial-merge order differs — but the
-      // no-false-negative membership contract must agree)
-      val keyHashes = hashed(0, 2000).unionByName(hashed(5000, 5400))
-        .as[Long].collect()
-      for ((bucket, zipBytes) <- viaZip) {
-        val fz = CuckooFilter.deserialize(zipBytes)
-        val fd = CuckooFilter.deserialize(viaDf(bucket))
-        keyHashes.foreach { h =>
-          assert(fz.mightContain(h) == fd.mightContain(h),
-            s"bucket $bucket disagrees on $h")
-        }
-      }
+      assert(handle.rdd.keys.collect().toSet == (0 until 4).toSet)
+      val filters = updated.rdd.collect().toMap.map { case (k, bytes) =>
+        k -> CuckooFilter.deserialize(bytes) }
+      assert(filters.keySet == (0 until b).toSet, "inserts must open the new bucket")
+      def positive(h: Long) = filters(Math.floorMod(h, b.toLong).toInt).mightContain(h)
+      inserts.as[Long].collect().foreach(h => assert(positive(h), s"inserted $h is sketch-negative"))
+      val deleted = deletes.as[Long].collect()
+      assert(deleted.count(positive) < deleted.length / 10, "deletes must clear their keys")
+      val frontier = hashed(0, 6000)
+      val evolved = seen.join(deletes, Seq("url_hash"), "left_anti").unionByName(inserts)
+      val viaZip = SketchHandle.gate(frontier, updated, evolved, "url_hash")
+        .as[Long].collect().sorted.toSeq
+      val exact = UrlSeen.exactAntiJoin(frontier, evolved, "url_hash")
+        .as[Long].collect().sorted.toSeq
+      assert(viaZip == exact)
     } finally { handle.unpersist(); updated.unpersist() }
   }
 

@@ -63,6 +63,42 @@ class UrlSeenSpec extends SparkTestBase {
     assert(falsePos < 100, s"false-positive rate too high: $falsePos/1000")
   }
 
+  test("a NULL url_hash is definitely new in every seen gate (== exact anti-join)") {
+    import spark.implicits._
+    import graft.seen.SketchHandle
+    import graft.util.CacheScope
+    val base = Synthetic.frontier(spark, 200, 4).toDF().select("url_hash", "url")
+    val frontier = base.unionByName(Seq((Option.empty[Long], "null-hash")).toDF("url_hash", "url"))
+    val seen = base.filter(col("url_hash") % 2 === 0).select("url_hash")
+    val seenN = seen.count()
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Option[Long], String)] =
+      df.select("url_hash", "url").collect()
+        .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getString(1))).toSeq.sorted
+    val exact = rows(UrlSeen.exactAntiJoin(frontier, seen, "url_hash"))
+    assert(exact.contains((None, "null-hash")))
+    val b = UrlSeen.bucketCount(seenN)
+    val scope = new CacheScope
+    val handle = SketchHandle.pin(
+      UrlSeen.buildCuckooFilters(seen, "url_hash", seenN, b), b, math.max(seenN / b, 1L))
+    val gates: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "broadcast bloom" -> (() => UrlSeen.antiJoin(frontier, seen, "url_hash", seenN, scope = scope)),
+      "partitioned bloom" -> (() => UrlSeen.antiJoin(frontier, seen, "url_hash", seenN,
+        forcePartitioned = true, scope = scope)),
+      "cuckoo" -> (() => UrlSeen.antiJoinCuckoo(frontier, seen, seen.limit(0), "url_hash", seenN,
+        scope = scope)),
+      "pinned sketch" -> (() => SketchHandle.gate(frontier, handle, seen, "url_hash", scope)))
+    try {
+      val wrong = gates.flatMap { case (name, gate) =>
+        scala.util.Try(rows(gate())) match {
+          case scala.util.Success(got) if got == exact => None
+          case scala.util.Success(got) => Some(s"$name: ${got.size} rows, exact ${exact.size}")
+          case scala.util.Failure(e) => Some(s"$name: threw ${e.getClass.getSimpleName}")
+        }
+      }
+      assert(wrong.isEmpty, wrong.mkString("; "))
+    } finally { scope.unpersistAll(); handle.unpersist() }
+  }
+
   test("bloom prefilter actually prunes: most unseen rows skip the join") {
     // statistical: with fpp=3%, >90% of truly-new hashes must be rejected by
     // the sketch (mightContain=false)
