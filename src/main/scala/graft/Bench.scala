@@ -96,7 +96,7 @@ object Bench {
       pending,
       graft.gen.Synthetic.robots(spark).toDF(),
       graft.gen.Synthetic.budgets(spark, Int.MaxValue).toDF(),
-      seen, expectedSeen, 0.03,
+      seen, expectedSeen,
       defaultBudget = Int.MaxValue, numPartitions = ShufflePartitions)
     val n = now.count()
     spark.catalog.clearCache()
@@ -235,7 +235,7 @@ object Bench {
     // min-of-rounds needed — bytes written are a function of the plan, not
     // the host), measured on one un-timed instrumented 1M round so the
     // number is regression-tracked in every BENCH_r*.json instead of
-    // re-derived ad hoc (VERDICT r04 #7 / DebugShuffleBytes).
+    // re-derived ad hoc (VERDICT r04 #7).
     val (shufBytes, shufScheduled) = {
       val s = session(32)
       try {

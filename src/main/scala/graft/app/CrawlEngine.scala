@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.extract.Extractors
 import graft.sched.Scheduler
-import graft.state.SnapshotTable
+import graft.state.{SnapshotTable, TableIO}
 
 /** The round-based crawl engine (SURVEY.md §3 "Spark shape", §7 module 8).
   *
@@ -42,7 +42,6 @@ final class CrawlEngine(
     saltFactor: Int = 8,
     defaultBudget: Int = 1000,
     maxAttempts: Int = 5,
-    bloomFpp: Double = 0.03,
     merchant: MerchantSpec = MerchantSpec.carrefour,
     /** Force the PARTITIONED Bloom build of the URL-seen gate regardless of
       * seen cardinality (production dispatches on
@@ -117,15 +116,12 @@ final class CrawlEngine(
     if (crashAfterCommit == n)
       throw new RuntimeException(s"injected crash after commit $n")
 
-  def readCheckpoint(): Option[Checkpoint] = {
-    if (!fs.exists(ckptPath)) return None
-    val in = fs.open(ckptPath)
-    val n = mapper.readTree(in); in.close()
-    Some(Checkpoint(n.path("round").asInt(), n.path("frontier").asInt(), n.path("seen").asInt(),
-      n.path("products").asInt(), n.path("quarantine").asInt(), n.path("schedule").asInt(),
-      n.path("lineage").asInt(), n.path("scheduledTotal").asLong(),
-      n.path("deals").asInt(), n.path("barcodeSeen").asInt(), n.path("sketch").asInt()))
-  }
+  def readCheckpoint(): Option[Checkpoint] =
+    TableIO.readPointer(fs, ckptPath)(in => mapper.readTree(in)).map(n =>
+      Checkpoint(n.path("round").asInt(), n.path("frontier").asInt(), n.path("seen").asInt(),
+        n.path("products").asInt(), n.path("quarantine").asInt(), n.path("schedule").asInt(),
+        n.path("lineage").asInt(), n.path("scheduledTotal").asLong(),
+        n.path("deals").asInt(), n.path("barcodeSeen").asInt(), n.path("sketch").asInt()))
 
   /** Streaming-ingest appends (FrontierStream) must parent from the RESUME-
     * RESOLVED base, not blind CURRENT: an append landing after a torn round
@@ -163,10 +159,7 @@ final class CrawlEngine(
     node.put("scheduledTotal", c.scheduledTotal)
     node.put("deals", c.deals); node.put("barcodeSeen", c.barcodeSeen)
     node.put("sketch", c.sketch)
-    val tmp = new Path(s"$stateDir/.checkpoint.json.tmp")
-    val out = fs.create(tmp, true); out.write(mapper.writeValueAsBytes(node)); out.close()
-    if (fs.exists(ckptPath)) fs.delete(ckptPath, false)
-    fs.rename(tmp, ckptPath)
+    TableIO.replacePointer(fs, ckptPath, mapper.writeValueAsBytes(node))
   }
 
   /** Derive scheduling columns for raw (category, url, is_processed,
@@ -366,7 +359,7 @@ final class CrawlEngine(
       RecrawlState(handle, exactSeen, newlyExpired, b, cap, inserted, rebuilt)
     }
     val (scheduled0, deferred) = Scheduler.scheduleRoundNarrow(
-      pending, robots, budgets, seen, seenCount, bloomFpp, defaultBudget, numPartitions,
+      pending, robots, budgets, seen, seenCount, defaultBudget, numPartitions,
       scope = scope, forcePartitionedSeen = forcePartitionedSeen,
       seenGate = recrawl.map(st => (narrow: DataFrame) =>
         graft.seen.SketchHandle.gate(

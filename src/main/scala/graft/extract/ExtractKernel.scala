@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * with the reference's exact sentinel semantics (SURVEY.md §2.2).
   *
   * Design point for scale: the page is parsed ONCE and every field extracted
-  * from the same DOM, returned as one struct — one UDF invocation per
+  * from the same DOM, returned as one struct — one kernel call per
   * (url, lang) row instead of ~10 re-parses. Jackson (ships with Spark) is
   * used for the embedded-JSON islands.
   *
@@ -63,15 +63,10 @@ object ExtractKernel extends Serializable {
     * empty (`name if name else sentinel` — empty string is falsy; whitespace
     * is not: the reference does NOT strip here).
     *
-    * Every P-field below splits into a `*From(hits)` core over the selected
-    * elements plus the original root+selector signature delegating to it:
-    * `extractAll` fuses all 14 constant selectors into ONE DOM walk
-    * (MiniHtml.selectMany — the per-selector walks were ~70% of kernel
-    * time), and sharing the cores guarantees the fused and per-field paths
-    * cannot diverge. */
-  def productName(root: Elem, selector: String, sentinel: String): String =
-    productNameFrom(MiniHtml.select(root, selector), sentinel)
-
+    * Every P-field below is a `*From(hits)` core over the elements its
+    * selector matched: `extractAll` fuses all 14 constant selectors into ONE
+    * DOM walk (MiniHtml.selectMany — the per-selector walks were ~70% of
+    * kernel time) and hands each core its hits. */
   private[extract] def productNameFrom(hits: List[Elem], sentinel: String): String =
     hits.headOption.map(_.text).filter(_.nonEmpty).getOrElse(sentinel)
 
@@ -85,17 +80,11 @@ object ExtractKernel extends Serializable {
     }
 
   /** P4 — carrefour_extract_data.py:26-32: `.css-1nnke3o` text stripped, "" default. */
-  def brandName(root: Elem): String =
-    brandNameFrom(MiniHtml.select(root, ".css-1nnke3o"))
-
   private[extract] def brandNameFrom(hits: List[Elem]): String =
     hits.headOption.map(_.text.trim).getOrElse("")
 
   /** P5 — carrefour_extract_data.py:35-46: first integer in
     * `.css-juexlj > span:nth-child(2)`; -1 when absent (plan maps -1 -> ""). */
-  def offerDaysToAdd(root: Elem): Int =
-    offerDaysFrom(MiniHtml.select(root, ".css-juexlj > span:nth-child(2)"))
-
   private[extract] def offerDaysFrom(hits: List[Elem]): Int =
     hits.headOption
       .flatMap(e => DigitsRe.findFirstIn(e.text.trim))
@@ -103,9 +92,6 @@ object ExtractKernel extends Serializable {
 
   /** P6 — carrefour_extract_data.py:49-59: `.css-iamwo8` texts (stripped,
     * non-empty), drop first, right-pad "" to exactly 7. */
-  def categories(root: Elem): Seq[String] =
-    categoriesFrom(MiniHtml.select(root, ".css-iamwo8"))
-
   private[extract] def categoriesFrom(hits: List[Elem]): Seq[String] = {
     val all = hits.map(_.text.trim).filter(_.nonEmpty)
     val dropped = if (all.nonEmpty) all.tail else Nil
@@ -114,9 +100,6 @@ object ExtractKernel extends Serializable {
 
   /** P7 — carrefour_extract_data.py:62-84: `#__NEXT_DATA__` JSON,
     * products[0].attributes.barCodes[0], fallback .ean, sentinel otherwise. */
-  def barcode(root: Elem): String =
-    barcodeFrom(MiniHtml.select(root, "#__NEXT_DATA__"))
-
   private[extract] def barcodeFrom(hits: List[Elem]): String = {
     try {
       hits.headOption match {
@@ -137,26 +120,16 @@ object ExtractKernel extends Serializable {
   }
 
   /** P8 — carrefour_extract_data.py:87-93: `div.css-1c2pck7 img`@src. */
-  def imageUrl(root: Elem): String =
-    imageUrlFrom(MiniHtml.select(root, "div.css-1c2pck7 img"))
-
   private[extract] def imageUrlFrom(hits: List[Elem]): String =
     hits.headOption.flatMap(_.attrs.get("src")).getOrElse(ImageSentinel)
 
   /** P10 — carrefour_extract_data.py:114-120: `.css-1i90gmp` first \d+.\d+. */
-  def priceAfter(root: Elem): String =
-    priceAfterFrom(MiniHtml.select(root, ".css-1i90gmp"))
-
   private[extract] def priceAfterFrom(hits: List[Elem]): String =
     hits.headOption.flatMap(e => PriceRe.findFirstIn(e.text)).getOrElse("")
 
   /** P9 — carrefour_extract_data.py:96-111: if priceAfter present, read
     * `del.css-1bdwabt` (raise on 'Use code'), else/on-failure fall back to
     * `.css-17ctnp`; sentinel "Price not found". */
-  def priceBefore(root: Elem, priceAfterValue: String): String =
-    priceBeforeFrom(MiniHtml.select(root, "del.css-1bdwabt"),
-      MiniHtml.select(root, ".css-17ctnp"), priceAfterValue)
-
   private[extract] def priceBeforeFrom(delHits: List[Elem], fallbackHits: List[Elem],
       priceAfterValue: String): String = {
     def fallback: String =
@@ -210,9 +183,6 @@ object ExtractKernel extends Serializable {
   /** Metro breadcrumb categories — metro_markets_extract_product_data.py:48-81:
     * `.breadcrumb li` texts via nested `a` (li without `a` -> ""), drop the
     * first crumb, pad "" to 7. */
-  def breadcrumbs(root: Elem): Seq[String] =
-    breadcrumbsFrom(MiniHtml.select(root, ".breadcrumb li"))
-
   private[extract] def breadcrumbsFrom(lis: List[Elem]): Seq[String] = {
     val crumbs = lis.map { li =>
       MiniHtml.selectOne(li, "a").map(_.text.trim).getOrElse("")
@@ -223,18 +193,12 @@ object ExtractKernel extends Serializable {
 
   /** P16 — metro_markets_extract_product_data.py:21-46: `.price p.before` /
     * `.price p.after` text, strip literal "LE", trim; "" when absent. */
-  def metroPrice(root: Elem, which: String): String =
-    metroPriceFrom(MiniHtml.select(root, s".price p.$which"))
-
   private[extract] def metroPriceFrom(hits: List[Elem]): String =
     hits.headOption.map(e => e.text.replace("LE", "").trim).getOrElse("")
 
   /** P14 — href harvest: every `a`'s href, "N/A" when the attribute is
     * missing (metro_markets_extract_product_urls.py:56-66). Absolutization
     * happens in the plan (UrlCanon.absolutize). */
-  def links(root: Elem): Seq[String] =
-    linksFrom(MiniHtml.select(root, "a"))
-
   private[extract] def linksFrom(hits: List[Elem]): Seq[String] =
     hits.map(_.attrs.getOrElse("href", "N/A"))
 
@@ -258,8 +222,7 @@ object ExtractKernel extends Serializable {
 
   /** Parse once, select everything in ONE DOM walk, extract every field.
     * `lang` selects the P1 vs P2 sentinel. Field semantics live in the
-    * shared `*From` cores above, so this fused path and the per-field
-    * select-based functions are the same code over the same hits. */
+    * `*From` cores above. */
   def extractAll(html: String, lang: String): PageFields = {
     val root = MiniHtml.parse(if (html == null) "" else html)
     val h = MiniHtml.selectMany(root, FusedSelectors)

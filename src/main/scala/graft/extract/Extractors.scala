@@ -1,23 +1,16 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.Product
 
 /** Spark plan layer over ExtractKernel: the EN⋈AR pivot (J1) + the 34-column
-  * Product projection (SURVEY.md §2.2, §3.1). One `extract_all` UDF call per
-  * (url, lang) page row — the page is parsed exactly once; everything else is
-  * codegen'd column algebra so Catalyst can prune/push as usual.
+  * Product projection (SURVEY.md §2.2, §3.1). One native `extract_all`
+  * expression call per (url, lang) page row — the page is parsed exactly
+  * once; everything else is codegen'd column algebra so Catalyst can
+  * prune/push as usual.
   */
 object Extractors {
-
-  /** Struct-returning kernel UDF: (html string, lang) -> PageFields. Kept
-    * for SQL registration; the hot path uses the native ExtractAllExpr
-    * (same kernel, same struct, inside whole-stage codegen). */
-  val extractAllUdf = udf((html: String, lang: String) => ExtractKernel.extractAll(html, lang))
-
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("extract_all", extractAllUdf)
 
   /** P11 — product id from URL (carrefour_extract_data.py:146). */
   def productIdFromUrl(url: Column): Column = {
@@ -174,13 +167,6 @@ object Extractors {
       .filter(en.isNotNull && en.getField("ldFound")) // NameError path dropped
       .select(cols ++ passThrough.map(col): _*)
       .select((Product.sinkOrder ++ passThrough).map(col): _*)
-  }
-
-  /** P18 — offer-nulling (seoudi:311-314 / spinneys:455-458): when the offer
-    * price equals the regular price there is no offer. */
-  def offerNulled(priceBefore: Column, priceAfter: Column): (Column, Column) = {
-    val isNoOffer = priceAfter === priceBefore
-    (priceBefore, when(isNoOffer, lit("")).otherwise(priceAfter))
   }
 
   /** P21 — brand lookup key (spinneys:399,445). */

@@ -1,6 +1,6 @@
 package graft.politeness
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,12 +18,6 @@ import org.apache.spark.sql.functions._
   *    the SAME urls are chosen at any parallelism.
   */
 object Politeness {
-
-  /** Priority ordering within a host: host_rank, depth, oldest-first
-    * discovery, url_hash tiebreak — a pure function of the data
-    * (SURVEY.md §7 hard-part 2). */
-  def priorityCols(df: DataFrame): Seq[Column] =
-    Seq(df("host_rank"), df("depth"), df("discovered_seq"), df("url_hash"))
 
   /** Apply robots rules: keep rows whose (host, path) resolves to allow,
     * longest matching prefix wins, unmatched hosts default-allow.

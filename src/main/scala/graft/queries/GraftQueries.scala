@@ -883,7 +883,7 @@ object GraftQueries {
     * vec_ids by md5-rank: a deterministic SPREAD sample — "first k by id"
     * clumps wherever ids correlate with embedding position, while a
     * hash-rank samples ∝ data density, which is what bounds the max cluster
-    * population (DebugScale centroid-balance evidence in BASELINE.md). Still
+    * population (centroid-balance evidence in BASELINE.md). Still
     * exactly SQL-mirrorable (md5 is the shared hash). */
   private def ivfDists(s: SparkSession, dir: String): DataFrame = {
     val k = ivfK(s, dir)
@@ -1836,7 +1836,7 @@ object GraftQueries {
     val budgets = (0 until 7).map(i => (s"shop$i.example.com", 50 + 30 * i))
       .toDF("host", "per_round")
     val (now, _) = Scheduler.scheduleRoundNarrow(
-      pending, robots, budgets, seen, expectedSeen = 100000L, bloomFpp = 0.03,
+      pending, robots, budgets, seen, expectedSeen = 100000L,
       defaultBudget = 100, numPartitions = 8, scope = scope)
     now.select(col("crawl_order"), col("url_norm"), col("host"), col("category"))
   }

@@ -80,31 +80,6 @@ object Scheduler {
     }(Encoders.row(outSchema))
   }
 
-  /** One scheduling round: robots filter -> per-host budget -> global crawl
-    * order over the rows scheduled this round. Deferred rows (over budget)
-    * are returned too, flagged `scheduled_now = false`, so the round driver
-    * re-enqueues them.
-    *
-    * Input must carry url_norm, url_hash, host, depth, host_rank,
-    * discovered_seq columns (FrontierEntry shape). */
-  def schedule(
-      frontier: DataFrame,
-      robots: DataFrame,
-      budgets: DataFrame,
-      defaultBudget: Int,
-      numPartitions: Int): (DataFrame, DataFrame) = {
-    val allowed = Politeness.applyRobots(frontier, robots)
-    // persisted: the scheduled-now and deferred branches both read this
-    val budgeted = Politeness.applyBudgets(allowed, budgets, defaultBudget).persist()
-    val now = budgeted.filter(col("scheduled_now")).drop("scheduled_now")
-    val deferred = budgeted.filter(!col("scheduled_now")).drop("scheduled_now")
-    val ordered = withCrawlOrder(
-      now,
-      Seq(col("host_rank"), col("depth"), col("discovered_seq"), col("url_hash")),
-      numPartitions)
-    (ordered, deferred)
-  }
-
   /** Full scheduling round with NARROW shuffles: robots filtering runs on
     * the wide rows first (broadcast rules + expression fold — shuffle-free),
     * then the seen gate, dedup, the budget windows and the range-partitioned
@@ -112,7 +87,7 @@ object Scheduler {
     * (url_hash, host, depth, host_rank, discovered_seq, attempt) — the long
     * url/url_norm/category strings cross the wire exactly once, keyed by
     * (url_hash, discovered_seq). Identical output to the wide single-window
-    * form (CrawlEngineSpec oracle + SchedulerSpec).
+    * form (CrawlEngineSpec oracle + SchedulerSpec's `WideScheduler`).
     *
     * Exchange budget (the round-2 profile showed dedup + budget phase-1 as
     * separate full-frontier exchanges): equal url_hash implies equal host
@@ -138,7 +113,6 @@ object Scheduler {
       budgets: DataFrame,
       seen: DataFrame,
       expectedSeen: Long,
-      bloomFpp: Double,
       defaultBudget: Int,
       numPartitions: Int,
       saltFactor: Int = 16,
@@ -167,7 +141,7 @@ object Scheduler {
     val unseen = seenGate match {
       case Some(gate) => gate(narrow)
       case None =>
-        UrlSeen.antiJoin(narrow, seen, "url_hash", expectedSeen, bloomFpp,
+        UrlSeen.antiJoin(narrow, seen, "url_hash", expectedSeen,
           forcePartitioned = forcePartitionedSeen, scope = scope)
     }
     val saltExpr = pmod(col("url_hash"), lit(saltFactor))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.model.Product
 
-/** Product sinks (SURVEY.md §2.8 K1/K2).
+/** Product sink (SURVEY.md §2.8 K1).
   *
   * The reference appends each product to an Excel sheet whose header row and
   * column order are fixed (helpers.py:39-49 — note "Brand Url" before
@@ -28,17 +28,6 @@ object ProductSink {
   def writeGoldenCsv(products: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     toSinkFrame(products)
       .write.mode(mode)
-      .option("header", "true")
-      .option("emptyValue", "")
-      .csv(path)
-
-  /** K2 — brands sink: header `Brand Name, Brand Image URL`
-    * (helpers.py:91). */
-  def writeBrandsCsv(brands: DataFrame, path: String): Unit =
-    brands
-      .select(col("brand_name"), col("brand_image_url"))
-      .toDF("Brand Name", "Brand Image URL")
-      .write.mode(SaveMode.Overwrite)
       .option("header", "true")
       .option("emptyValue", "")
       .csv(path)

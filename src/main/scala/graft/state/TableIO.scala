@@ -1,10 +1,13 @@
 package graft.state
 
+import java.io.InputStream
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable
+import scala.util.Try
 
 /** Iceberg-shaped snapshot table over plain Parquet (SURVEY.md §7).
   *
@@ -38,8 +41,8 @@ import scala.collection.mutable
   * CURRENT mid-"rename"). An object-store deployment must swap this class
   * for a real Iceberg catalog (the trait-shaped boundary here exists for
   * exactly that swap) or front CURRENT with a conditional-put/DynamoDB-style
-  * pointer commit. The delete-before-rename pair in swingCurrent is the
-  * sensitive window.
+  * pointer commit. On a filesystem with atomic rename, the delete-before-
+  * rename window of every pointer swap is closed by `TableIO.readPointer`.
   */
 final class SnapshotTable(spark: SparkSession, root: String) {
 
@@ -62,39 +65,24 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     s.dataDirs.foreach(arr.add)
     node.put("lineage", s.lineageJson)
     val p = new Path(snapsDir, f"v${s.id}%06d.json")
-    val tmp = new Path(snapsDir, f".v${s.id}%06d.json.tmp")
-    val out = fs.create(tmp, true)
-    out.write(mapper.writeValueAsBytes(node)); out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
+    TableIO.replacePointer(fs, p, mapper.writeValueAsBytes(node))
     p
   }
 
-  private def swingCurrent(id: Int): Unit = {
-    val tmp = new Path(snapsDir, ".CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    out.write(f"v$id%06d.json".getBytes("UTF-8")); out.close()
-    if (fs.exists(currentPtr)) fs.delete(currentPtr, false)
-    fs.rename(tmp, currentPtr) // atomic on HDFS/local
-  }
+  private def swingCurrent(id: Int): Unit =
+    TableIO.replacePointer(fs, currentPtr, f"v$id%06d.json".getBytes("UTF-8"))
 
-  def currentSnapshot: Option[Snapshot] = {
-    if (!fs.exists(currentPtr)) return None
-    val in = fs.open(currentPtr)
-    val name = scala.io.Source.fromInputStream(in).mkString.trim
-    in.close()
-    readManifest(new Path(snapsDir, name))
-  }
+  def currentSnapshot: Option[Snapshot] =
+    TableIO.readPointer(fs, currentPtr)(in =>
+      new Path(snapsDir, scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim))
+      .flatMap(readManifest)
 
-  private def readManifest(p: Path): Option[Snapshot] = {
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val node = mapper.readTree(in)
-    in.close()
-    val dirs = (0 until node.path("dataDirs").size()).map(i => node.path("dataDirs").get(i).asText())
-    Some(Snapshot(node.path("id").asInt(), node.path("parent").asInt(),
-      dirs, node.path("rowCount").asLong(), node.path("lineage").asText("")))
-  }
+  private def readManifest(p: Path): Option[Snapshot] =
+    TableIO.readPointer(fs, p)(in => mapper.readTree(in)).map { node =>
+      val dirs = (0 until node.path("dataDirs").size()).map(i => node.path("dataDirs").get(i).asText())
+      Snapshot(node.path("id").asInt(), node.path("parent").asInt(),
+        dirs, node.path("rowCount").asLong(), node.path("lineage").asText(""))
+    }
 
   def snapshotAt(id: Int): Option[Snapshot] = readManifest(new Path(snapsDir, f"v$id%06d.json"))
 
@@ -172,16 +160,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   def read(): Option[DataFrame] =
     currentSnapshot.flatMap(readSnapshot)
 
-  /** Resume-safe incremental read: `readAt(resolveBase(baseId, onlyLineage))`
-    * — the highest snapshot whose ancestry back to `baseId` is
-    * `onlyLineage`-only (see resolveBase). Pure ingest appends remain
-    * visible without a checkpoint bump, INCLUDING those below a torn round
-    * commit; only the torn commits themselves stay orphaned. */
-  def readAtOrIngested(baseId: Int, onlyLineage: String): Option[DataFrame] = {
-    if (currentSnapshot.isEmpty) return None
-    readAt(resolveBase(baseId, onlyLineage))
-  }
-
   /** Read ONLY the data dirs snapshot `toId` has beyond snapshot `fromId`
     * (both on the committed chain; dir lists are cumulative, so this is the
     * appended delta — e.g. the seen rows a checkpointed sketch has not yet
@@ -201,4 +179,37 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   private def readSnapshot(s: Snapshot): Option[DataFrame] =
     if (s.dataDirs.isEmpty) None
     else Some(spark.read.parquet(s.dataDirs: _*))
+}
+
+/** Replace-and-read of the small files that name committed state: a table's
+  * `CURRENT` pointer and manifests, the engine's `checkpoint.json`. */
+object TableIO {
+
+  private def tmpOf(ptr: Path): Path = new Path(ptr.getParent, s".${ptr.getName}.tmp")
+
+  /** Replaces `ptr` with `bytes`: write and close the sibling `.<name>.tmp`,
+    * delete `ptr`, rename the temp into place (atomic on HDFS/local). */
+  def replacePointer(fs: FileSystem, ptr: Path, bytes: Array[Byte]): Unit = {
+    val tmp = tmpOf(ptr)
+    val out = fs.create(tmp, true)
+    out.write(bytes); out.close()
+    if (fs.exists(ptr)) fs.delete(ptr, false)
+    fs.rename(tmp, ptr)
+  }
+
+  /** `parse` of `ptr`'s content; None when there is none. A missing `ptr`
+    * beside its temp is a replace killed between delete and rename: the
+    * temp was closed before the delete, so it holds the new content and is
+    * rolled forward into place. The one temp that can be partial belongs to
+    * a first write killed mid-write (no `ptr` ever existed); it fails
+    * `parse`, reads as absent, and the retried replace overwrites it. */
+  def readPointer[T](fs: FileSystem, ptr: Path)(parse: InputStream => T): Option[T] = {
+    def parseAt(p: Path): T = { val in = fs.open(p); try parse(in) finally in.close() }
+    if (fs.exists(ptr)) return Some(parseAt(ptr))
+    val tmp = tmpOf(ptr)
+    if (!fs.exists(tmp)) return None
+    val rolled = Try(parseAt(tmp)).toOption
+    if (rolled.isDefined) fs.rename(tmp, ptr)
+    rolled
+  }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.concurrent.TrieMap
 
-/** Per-JOB wall-time audit for one catalog query (the DebugJobs listener,
-  * pointed at `SparkEntry.queries(name)` instead of the scheduling round):
+/** Per-JOB wall-time audit for one catalog query (a job/stage listener
+  * pointed at `SparkEntry.queries(name)`):
   * shows where an iterative query's time goes — which actions fire, how many
   * AQE stage-jobs each action fans into, and what each costs — so a "slow
   * query" claim decomposes into named jobs before anything is optimized.

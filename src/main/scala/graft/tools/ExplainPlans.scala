@@ -4,21 +4,26 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dump formatted physical plans of the engine's key pipelines to PLANS.md
-  * for scale review: filter/column pushdown reaching the parquet scans,
-  * broadcast joins where a side is small, whole-stage codegen spans, no
-  * unexpected exchanges. */
+/** Dump formatted physical plans of the engine's key pipelines to one
+  * markdown file (the repo keeps it as PLANS.md) for scale review:
+  * filter/column pushdown reaching the parquet scans, broadcast joins where
+  * a side is small, whole-stage codegen spans, no unexpected exchanges.
+  *
+  * Usage: runMain graft.tools.ExplainPlans <sfDir> <outFile>
+  */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
+    val sf = args(0)
+    val outFile = args(1)
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sf = "/root/testdata/sf0.01"
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the key pipelines\n\n")
-    sb.append("Generated by `graft.tools.ExplainPlans` (local[4], sf0.01). Review\n")
+    val sfName = Paths.get(sf).getFileName
+    sb.append(s"Generated by `graft.tools.ExplainPlans` (local[4], $sfName). Review\n")
     sb.append("criteria per plan: pushdown reaches the scan (PushedFilters /\n")
     sb.append("ReadSchema), small sides broadcast, codegen spans wide, exchanges\n")
     sb.append("only where the algorithm requires a repartition.\n")
@@ -39,27 +44,14 @@ object ExplainPlans {
         .filter(col("doc_id") % 8 =!= 0)
         .select("doc_id", "source"))
 
-    // 2. scheduling round core
-    val frontier = graft.gen.Synthetic.frontier(spark, 5000, 4).toDF()
-      .filter(!col("is_processed")).dropDuplicates("url_hash")
-    val (now, _) = graft.sched.Scheduler.schedule(
-      frontier, graft.gen.Synthetic.robots(spark).toDF(),
-      graft.gen.Synthetic.budgets(spark, 100).toDF(), 100, 8)
-    dump("scheduling round (dedup → robots → budget → crawl order)",
-      "Expect: robots and budgets joins as BroadcastHashJoin; two window " +
-        "exchanges for the two-phase budget (host+salt, then host over " +
-        "candidates only); one range exchange for the global order; no " +
-        "single-partition Exchange anywhere.",
-      now)
-
-    // 2b. narrow-shuffle scheduling round — the engine/bench path
+    // 2. narrow-shuffle scheduling round — the engine/bench path
     val pendingWide = graft.gen.Synthetic.frontier(spark, 5000, 4).toDF()
       .filter(!col("is_processed"))
     val seenNarrow = pendingWide.filter(col("url_hash") % 3 === 0).select("url_hash")
     val (nowNarrow, _) = graft.sched.Scheduler.scheduleRoundNarrow(
       pendingWide, graft.gen.Synthetic.robots(spark).toDF(),
       graft.gen.Synthetic.budgets(spark, 100).toDF(),
-      seenNarrow, 2000, 0.03, 100, 8)
+      seenNarrow, 2000, 100, 8)
     dump("NARROW-shuffle scheduling round (engine/bench path)",
       "Expect: every Exchange between the robots fold and the final rejoin " +
         "carries only (url_hash, host, depth, host_rank, discovered_seq, " +
@@ -86,6 +78,8 @@ object ExplainPlans {
       graft.extract.Extractors.carrefourProduct(pivoted, "2024-11-10"))
 
     // 4. seen anti-join (bloom + exact)
+    val frontier = graft.gen.Synthetic.frontier(spark, 5000, 4).toDF()
+      .filter(!col("is_processed")).dropDuplicates("url_hash")
     val seen = frontier.filter(col("url_hash") % 3 === 0).select("url_hash")
     dump("URL-seen gate (Bloom prefilter + exact anti-join)",
       "Expect: the Bloom path splits the frontier with cheap filters; only " +
@@ -136,7 +130,7 @@ object ExplainPlans {
       graft.queries.GraftQueries.all("q_crawl_schedule")(spark, sf))
 
     // Narrative notes that must survive regeneration (this tool OVERWRITES
-    // PLANS.md — keep them here, not hand-edited into the output file).
+    // its output file — keep them here, not hand-edited into PLANS.md).
     sb.append(
       """
 ## extract oracles: the two HTML queries are now FULLY oracle-exact (round-5)
@@ -167,8 +161,8 @@ which the splitmix oracle cannot express because it never sees the html
 column — the two mechanisms fail on disjoint bug classes (kernel/golden
 drift vs generator/projection drift).
 """)
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println("wrote /root/repo/PLANS.md")
+    Files.writeString(Paths.get(outFile), sb.toString)
+    println(s"wrote $outFile")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.url
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** RFC-3986 URL canonicalization + the reference's merchant-specific URL
@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * The full RFC-3986 normalizer (scheme/host lowercasing, default-port strip,
   * fragment removal, percent-encoding normalization, dot-segment removal,
   * query-param sort) is a pure Scala function so the straight-line test
-  * oracle and the Spark plan share one definition; it is exposed to plans as
-  * a registered UDF. A Column-only "light" canonicalizer built purely from
+  * oracle and the Spark plan share one definition; plans reach it through
+  * the native `UrlCanonExpr`/`UrlCanonPartsExpr` expressions. A Column-only "light" canonicalizer built purely from
   * codegen'd builtins is also provided for plans that only need the
   * SQL-expressible subset (and for the DuckDB oracle checks).
   */
@@ -80,7 +80,7 @@ object UrlCanon extends Serializable {
   }
 
   /** Full canonical form. Pure function: the single definition shared by the
-    * Spark UDF, the straight-line scheduler oracle, and the tests. */
+    * native plan expressions, the straight-line scheduler oracle, and the tests. */
   def canonicalize(raw: String): String = {
     if (raw == null) return null
     val trimmed = raw.trim
@@ -158,7 +158,7 @@ object UrlCanon extends Serializable {
 
   /** Light canonicalizer from pure builtins: lowercase scheme+host, strip
     * default :80/:443 port, drop #fragment, drop trailing lone '?'. The parts
-    * of RFC 3986 that regex can express; the UDF covers the rest. */
+    * of RFC 3986 that regex can express; `canonicalize` covers the rest. */
   def canonLight(url: Column): Column = {
     val noFrag = regexp_replace(url, "#.*$", "")
     val noEmptyQ = regexp_replace(noFrag, "\\?$", "")
@@ -205,27 +205,12 @@ object UrlCanon extends Serializable {
     size(filter(split(path, "/"), s => length(s) > lit(0)))
   }
 
-  // ---------------------------------------------------------------------
-  // UDF registration (full canonicalizer in plans)
-  // ---------------------------------------------------------------------
-
-  val canonUdf = udf(canonicalize _)
-  val hostUdf = udf(hostOf _)
-  val depthUdf = udf(depthOf _)
-
-  /** Canonical form + host + depth in ONE pass (one UDF invocation per row
-    * on the frontier hot path instead of three re-parses). */
+  /** Canonical form + host + depth in ONE pass (one kernel call per row on
+    * the frontier hot path instead of three re-parses); the native
+    * `UrlCanonPartsExpr` evaluates it inside whole-stage codegen. */
   final case class CanonParts(url_norm: String, host: String, depth: Int)
   def canonParts(raw: String): CanonParts = {
     val norm = canonicalize(raw)
     CanonParts(norm, hostOf(norm), depthOf(norm))
-  }
-  val canonPartsUdf = udf(canonParts _)
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("url_canon", canonicalize _)
-    spark.udf.register("url_host", hostOf _)
-    spark.udf.register("url_depth", depthOf _)
-    spark.udf.register("url_canon_parts", canonParts _)
   }
 }

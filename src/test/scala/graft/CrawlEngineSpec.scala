@@ -120,6 +120,24 @@ class CrawlEngineSpec extends SparkTestBase {
     assert(e2.seenTable.read().get.as[Long].collect().toSet == oracle._2)
   }
 
+  test("a checkpoint swap torn between delete and rename rolls forward exactly") {
+    val dir = freshDir()
+    val pages = Synthetic.pages(spark, PagesN, 4).toDF()
+    val robots = Synthetic.robots(spark).toDF()
+    val budgets = Synthetic.budgets(spark, Budget).toDF()
+    val e1 = new CrawlEngine(spark, dir,
+      numPartitions = 8, defaultBudget = Budget, maxAttempts = MaxAttempts)
+    e1.init(Synthetic.frontier(spark, N, 4).toDF())
+    e1.runRound(pages, robots, budgets)
+    tearPointerSwap(s"$dir/checkpoint.json")
+    val e2 = new CrawlEngine(spark, dir,
+      numPartitions = 8, defaultBudget = Budget, maxAttempts = MaxAttempts)
+    assert(e2.readCheckpoint().map(_.round) == Some(1))
+    e2.runRound(pages, robots, budgets)
+    val want = oracle._1.filter(_.round <= 2).map(s => (s.round, s.crawlOrder, s.urlNorm))
+    assert(schedule(e2) == want)
+  }
+
   test("kill BETWEEN table commits (torn round) resumes exactly, no duplication") {
     import spark.implicits._
     val pages = Synthetic.pages(spark, PagesN, 4).toDF()

@@ -165,8 +165,8 @@ class ExtractKernelSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val spark = SparkTestBase.session
     import spark.implicits._
-    // value identity: the native expression == the ScalaUDF it replaced,
-    // field for field, through the same collect path
+    // value identity: the native expression == the kernel wrapped in a
+    // ScalaUDF, field for field, through the same collect path
     val pages = Synthetic.pages(spark, 40, 2).toDF()
     def dump(fields: org.apache.spark.sql.Column): Map[(String, String), String] =
       pages.withColumn("fields", fields)
@@ -176,8 +176,8 @@ class ExtractKernelSpec extends AnyFunSuite {
         .toMap
     val viaExpr = dump(
       graft.plans.ExtractAllExpr.extractAll(decode(col("html"), "UTF-8"), col("lang")))
-    val viaUdf = dump(
-      graft.extract.Extractors.extractAllUdf(decode(col("html"), "UTF-8"), col("lang")))
+    val kernelUdf = udf((html: String, lang: String) => ExtractKernel.extractAll(html, lang))
+    val viaUdf = dump(kernelUdf(decode(col("html"), "UTF-8"), col("lang")))
     assert(viaExpr.nonEmpty && viaExpr == viaUdf,
       viaExpr.find(kv => viaUdf.get(kv._1) != Some(kv._2)).toString.take(400))
     // plan shape: the 100 TB hot path must stay inside whole-stage codegen —

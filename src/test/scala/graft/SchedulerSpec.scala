@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.gen.Synthetic
 import graft.sched.Scheduler
+import graft.oracle.WideScheduler
 
 class SchedulerSpec extends SparkTestBase {
 
@@ -41,7 +42,7 @@ class SchedulerSpec extends SparkTestBase {
     val budgets = Synthetic.budgets(spark, 30).toDF()
 
     val (narrowNow, narrowDef) = Scheduler.scheduleRoundNarrow(
-      pending, robots, budgets, seen, expectedSeen = 1000, bloomFpp = 0.03,
+      pending, robots, budgets, seen, expectedSeen = 1000,
       defaultBudget = 30, numPartitions = 8)
     // wide straight-line: robots -> dedup window -> exact anti-join -> budget
     // -> order, all on full rows
@@ -51,7 +52,7 @@ class SchedulerSpec extends SparkTestBase {
       .withColumn("__rn", row_number().over(dedupW)).filter(col("__rn") === 1).drop("__rn")
       .dropDuplicates("url_hash", "discovered_seq") // collapse replayed identical rows
     val unseen = UrlSeen.exactAntiJoin(deduped, seen, "url_hash")
-    val (wideNow, wideDef) = Scheduler.schedule(unseen, robots, budgets, 30, 8)
+    val (wideNow, wideDef) = WideScheduler.schedule(unseen, robots, budgets, 30, 8)
 
     def key(df: org.apache.spark.sql.DataFrame, withOrder: Boolean) = {
       val cols = (if (withOrder) Seq("crawl_order") else Nil) ++
@@ -74,7 +75,7 @@ class SchedulerSpec extends SparkTestBase {
     val f = Synthetic.frontier(spark, 800, 4).toDF()
       .filter(!col("is_processed")).dropDuplicates("url_hash")
     val budget = 20
-    val (now, deferred) = Scheduler.schedule(
+    val (now, deferred) = WideScheduler.schedule(
       f, Synthetic.robots(spark).toDF(), Synthetic.budgets(spark, budget).toDF(),
       defaultBudget = budget, numPartitions = 4)
     val perHost = now.groupBy("host").count().collect()
@@ -105,7 +106,7 @@ class SchedulerSpec extends SparkTestBase {
     // must be gated out, as CrawlEngine.init does)
     val preSeen = graft.oracle.CrawlOracle.preSeenHashes(n)
     val unseen = deduped.filter(!col("url_hash").isin(preSeen.toSeq: _*))
-    val (now, _) = Scheduler.schedule(
+    val (now, _) = WideScheduler.schedule(
       unseen, Synthetic.robots(spark).toDF(), Synthetic.budgets(spark, 30).toDF(),
       defaultBudget = 30, numPartitions = 4)
     val got = now.select("crawl_order", "url_norm").collect()

@@ -66,4 +66,20 @@ class SnapshotTableSpec extends SparkTestBase {
     val r2 = t.append(df(4L), "round:2", t.resolveBase(base, "ingest")) // replay
     assert(idsAt(t, r2) == Set(1L, 2L, 4L))
   }
+
+  test("a CURRENT swap torn between delete and rename rolls forward") {
+    val root = Files.createTempDirectory("graft-snap").toString
+    val t = new SnapshotTable(spark, root)
+    t.overwrite(df(1L), "round:1")
+    val s2 = t.append(df(2L), "ingest")
+    tearPointerSwap(s"$root/snapshots/CURRENT")
+    val restarted = new SnapshotTable(spark, root)
+    assert(restarted.currentSnapshot.map(_.id) == Some(s2))
+    // the next append takes the next id and parents from the rolled-forward
+    // head; snapshot s2's manifest is not overwritten
+    val s3 = restarted.append(df(3L), "ingest")
+    assert(s3 == s2 + 1)
+    assert(idsAt(restarted, s2) == Set(1L, 2L))
+    assert(idsAt(restarted, s3) == Set(1L, 2L, 3L))
+  }
 }

@@ -9,6 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // keep the session for later suites
+
+  /** Leaves the on-disk state of a pointer replace (`TableIO.replacePointer`)
+    * killed between its delete and its rename: `ptr` is gone and its closed
+    * sibling `.<name>.tmp` holds the content `ptr` had. */
+  protected def tearPointerSwap(ptr: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(ptr)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(p, new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")))
+  }
 }
 
 object SparkTestBase {
