@@ -96,7 +96,7 @@ object Bench {
       pending,
       graft.gen.Synthetic.robots(spark).toDF(),
       graft.gen.Synthetic.budgets(spark, Int.MaxValue).toDF(),
-      seen, expectedSeen,
+      graft.seen.UrlSeen.antiJoin(_, seen, "url_hash", expectedSeen),
       defaultBudget = Int.MaxValue, numPartitions = ShufflePartitions)
     val n = now.count()
     spark.catalog.clearCache()

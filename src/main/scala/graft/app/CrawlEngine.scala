@@ -19,7 +19,7 @@ import graft.state.{SnapshotTable, TableIO}
   *
   *   pending frontier
   *     -> dedup (first-wins by discovered_seq)          [A1/J4]
-  *     -> URL-seen anti-join (Bloom + exact)            [J4]
+  *     -> URL-seen anti-join (sketch + exact)           [J4]
   *     -> robots filter + per-host budget               [O2/O3]
   *     -> deterministic global crawl order              [O1]
   *     -> salted repartition by host                    [skew]
@@ -33,6 +33,12 @@ import graft.state.{SnapshotTable, TableIO}
   * quarantine at maxAttempts [O4/O5]. All state lives in SnapshotTables; the
   * checkpoint file commits LAST, so a kill at any point resumes exactly
   * [O6] — verified by CrawlEngineSpec.
+  *
+  * The URL-seen gate is picked per round: under a re-crawl window the
+  * checkpointed pinned cuckoo sketch ([[graft.seen.SketchHandle.gate]]),
+  * otherwise [[graft.seen.UrlSeen.antiJoin]] — a broadcast Bloom while it
+  * fits Spark's broadcast limit, the executor-built pinned cuckoo sketch
+  * above it. The scheduler applies the gate it is handed.
   */
 final class CrawlEngine(
     spark: SparkSession,
@@ -43,14 +49,6 @@ final class CrawlEngine(
     defaultBudget: Int = 1000,
     maxAttempts: Int = 5,
     merchant: MerchantSpec = MerchantSpec.carrefour,
-    /** Force the PARTITIONED Bloom build of the URL-seen gate regardless of
-      * seen cardinality (production dispatches on
-      * UrlSeen.PartitionedThreshold — 8M — from the manifest rowCount).
-      * Lets CrawlEngineSpec drive the full round + kill/resume pipeline
-      * through the executor-built cogrouped-Bloom path at test scale: the
-      * two halves were individually proven (UrlSeenSpec, DebugBloomScale)
-      * but never composed through an engine commit cycle (VERDICT r04 #3). */
-    forcePartitionedSeen: Boolean = false,
     /** RE-CRAWL WINDOW (J4b): when Some(w), a URL's seen entry EXPIRES w
       * rounds after the round it was fetched in — if the frontier
       * rediscovers the URL (link harvest or ingest append) at or after
@@ -63,8 +61,9 @@ final class CrawlEngine(
       * the round's fetched hashes; [[graft.seen.SketchHandle.gate]]
       * computes frontier ANTI (seen ∖ expired), still exact end-to-end).
       * Steady-state per-round work is bounded by the window, never the
-      * seen history. None (default) = the Bloom gate, single-column seen
-      * table, never re-crawl — every pre-existing path is byte-identical. */
+      * seen history. None (default) = `UrlSeen.antiJoin` (broadcast Bloom or,
+      * above the broadcast limit, a per-call pinned sketch), single-column
+      * seen table, never re-crawl. */
     recrawlAfterRounds: Option[Int] = None) {
 
   import spark.implicits._
@@ -254,10 +253,10 @@ final class CrawlEngine(
     val frontierCols = pending.columns.map(col).toSeq
 
     // A1/J4/O1-O3 as ONE narrow-shuffle round: robots (shuffle-free fold on
-    // wide rows), then dedup -> Bloom+exact seen gate -> budgets -> global
+    // wide rows), then dedup -> sketch+exact seen gate -> budgets -> global
     // order over the narrow (url_hash, host, depth, host_rank,
     // discovered_seq, attempt) projection; url/category strings rejoin once
-    // at the end. Bloom sizing reads the seen cardinality from the snapshot
+    // at the end. Sketch sizing reads the seen cardinality from the snapshot
     // MANIFEST (rowCount maintained at every commit) — no count scan.
     // per-round cache scope: every frame the round persists (here and down
     // the scheduler/politeness/seen call chain) is released at the commit
@@ -358,12 +357,12 @@ final class CrawlEngine(
       }
       RecrawlState(handle, exactSeen, newlyExpired, b, cap, inserted, rebuilt)
     }
+    val gate: DataFrame => DataFrame = recrawl match {
+      case Some(st) => graft.seen.SketchHandle.gate(_, st.handle, st.exactSeen, "url_hash", scope)
+      case None => graft.seen.UrlSeen.antiJoin(_, seen, "url_hash", seenCount, scope = scope)
+    }
     val (scheduled0, deferred) = Scheduler.scheduleRoundNarrow(
-      pending, robots, budgets, seen, seenCount, defaultBudget, numPartitions,
-      scope = scope, forcePartitionedSeen = forcePartitionedSeen,
-      seenGate = recrawl.map(st => (narrow: DataFrame) =>
-        graft.seen.SketchHandle.gate(
-          narrow, st.handle, st.exactSeen, "url_hash", scope)))
+      pending, robots, budgets, gate, defaultBudget, numPartitions, scope = scope)
     // A3: plan-attached observe metrics — the scheduled count and per-round
     // host stats ride the materializing action for free (the reference's
     // count barriers, spinneys_extract_data.py:216-238, re-expressed as

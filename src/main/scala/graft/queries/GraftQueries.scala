@@ -1836,7 +1836,8 @@ object GraftQueries {
     val budgets = (0 until 7).map(i => (s"shop$i.example.com", 50 + 30 * i))
       .toDF("host", "per_round")
     val (now, _) = Scheduler.scheduleRoundNarrow(
-      pending, robots, budgets, seen, expectedSeen = 100000L,
+      pending, robots, budgets,
+      UrlSeen.antiJoin(_, seen, "url_hash", expectedSeen = 100000L, scope = scope),
       defaultBudget = 100, numPartitions = 8, scope = scope)
     now.select(col("crawl_order"), col("url_norm"), col("host"), col("category"))
   }

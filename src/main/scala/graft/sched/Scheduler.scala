@@ -111,19 +111,15 @@ object Scheduler {
       pending: DataFrame,
       robots: DataFrame,
       budgets: DataFrame,
-      seen: DataFrame,
-      expectedSeen: Long,
+      /** The URL-seen gate: called with the narrow frontier projection, it
+        * returns the projection's unseen subset (the engine passes
+        * `UrlSeen.antiJoin`, or `SketchHandle.gate` under a re-crawl
+        * window). */
+      gate: DataFrame => DataFrame,
       defaultBudget: Int,
       numPartitions: Int,
       saltFactor: Int = 16,
-      scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged,
-      forcePartitionedSeen: Boolean = false,
-      /** J4b re-crawl window: when set, REPLACES the Bloom seen gate. Called
-        * with the narrow frontier projection; must return its unseen subset
-        * (the engine passes a closure over its checkpointed cuckoo filters —
-        * SketchHandle.gate against seen ∖ expired). */
-      seenGate: Option[DataFrame => DataFrame] = None): (DataFrame, DataFrame) = {
-    import graft.seen.UrlSeen
+      scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val allowed = Politeness.applyRobots(pending, robots)
     val narrowCols = Seq("url_hash", "host", "depth", "host_rank", "discovered_seq", "attempt")
@@ -137,13 +133,7 @@ object Scheduler {
       .groupBy(joinKeys.map(col): _*)
       .agg(min(struct(stringCols.map(col): _*)).as("__row"))
       .select(joinKeys.map(col) ++ stringCols.map(c => col("__row").getField(c).as(c)): _*)
-    val narrow = allowedP.select(narrowCols.map(col): _*)
-    val unseen = seenGate match {
-      case Some(gate) => gate(narrow)
-      case None =>
-        UrlSeen.antiJoin(narrow, seen, "url_hash", expectedSeen,
-          forcePartitioned = forcePartitionedSeen, scope = scope)
-    }
+    val unseen = gate(allowedP.select(narrowCols.map(col): _*))
     val saltExpr = pmod(col("url_hash"), lit(saltFactor))
     val partitioned = unseen.repartition(numPartitions, col("host"), saltExpr)
     // first-wins dedup as a lag scan over the shared exchange: rows of one

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Executor-side cuckoo-filter construction as a Catalyst aggregate — the
-  * deletable sibling of [[BloomAgg]] with the same partitioned-build shape:
+  * seen gate's build above the broadcast limit and the re-crawl window's:
   * each bucket folds its long inputs where the data lives, the driver never
   * assembles a monolithic sketch. Membership is placement-independent, so
   * the nondeterministic partial-merge order cannot change gate output.

@@ -38,10 +38,11 @@ import org.apache.spark.storage.StorageLevel
   * same arrangement with `preservesPartitioning` maps, so partition index i
   * holds exactly the buckets with murmur3(bucket) % buckets == i on both
   * sides of every zip. Exactness: the gate is the same two-stage contract as
-  * the Bloom gates in `UrlSeen` (sketch-negatives definitely new;
+  * the broadcast Bloom gate in `UrlSeen` (sketch-negatives definitely new;
   * sketch-positives verified by the exact anti-join), asserted end-to-end by
-  * CrawlEngineRecrawlSpec. This is the one cuckoo path: the engine's
-  * re-crawl gate and `UrlSeen.antiJoinCuckoo` both run it.
+  * CrawlEngineRecrawlSpec. This is the one executor-built sketch path: the
+  * engine's re-crawl gate, `UrlSeen.antiJoinCuckoo` and `UrlSeen.antiJoin`
+  * above the broadcast limit all run it.
   */
 final case class SketchHandle(
     rdd: RDD[(Int, Array[Byte])], buckets: Int, capacity: Long) {
@@ -82,7 +83,14 @@ object SketchHandle {
     * exactSeen, with ZERO sketch bytes crossing an exchange. */
   def gate(frontier: DataFrame, handle: SketchHandle, exactSeen: DataFrame,
       hashCol: String,
-      scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged): DataFrame = {
+      scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged): DataFrame =
+    verify(flag(frontier, handle, hashCol, scope), exactSeen, hashCol)
+
+  /** `frontier` plus `__bucket` and `__maybe_seen` (sketch-positive), zipped
+    * against the pinned filters; persisted in `scope`, because both branches
+    * of [[verify]] read it. */
+  private[seen] def flag(frontier: DataFrame, handle: SketchHandle, hashCol: String,
+      scope: graft.util.CacheScope): DataFrame = {
     val spark = frontier.sparkSession
     val withBucket = frontier
       .withColumn("__bucket", bucketOf(col(hashCol), handle.buckets))
@@ -93,7 +101,7 @@ object SketchHandle {
       .add("__maybe_seen", BooleanType, nullable = false)
     val flaggedRdd: RDD[InternalRow] =
       arranged.queryExecution.toRdd.zipPartitions(handle.rdd) { (rows, sketches) =>
-        // one deserialization per bucket per task — the cogroup's bound
+        // one deserialization per bucket per task, never one per row
         val probes = new java.util.HashMap[Int, CuckooFilter]()
         sketches.foreach { case (b, bytes) =>
           probes.put(b, CuckooFilter.deserialize(bytes))
@@ -107,12 +115,15 @@ object SketchHandle {
           joined(r, if (maybe) yes else no)
         }
       }
-    val flagged = org.apache.spark.sql.GraftColumnBridge
-      .internalDf(spark, flaggedRdd, outSchema)
-    // persisted: the definitely-new and candidate branches both read it
-    val flaggedP = scope.track(flagged.persist())
-    val definitelyNew = flaggedP.filter(!col("__maybe_seen")).drop("__maybe_seen", "__bucket")
-    val candidates = flaggedP.filter(col("__maybe_seen")).drop("__maybe_seen", "__bucket")
+    scope.track(org.apache.spark.sql.GraftColumnBridge
+      .internalDf(spark, flaggedRdd, outSchema).persist())
+  }
+
+  /** Sketch-negatives of a [[flag]]ged frame are definitely new;
+    * sketch-positives pass the exact left-anti join against `exactSeen`. */
+  private[seen] def verify(flagged: DataFrame, exactSeen: DataFrame, hashCol: String): DataFrame = {
+    val definitelyNew = flagged.filter(!col("__maybe_seen")).drop("__maybe_seen", "__bucket")
+    val candidates = flagged.filter(col("__maybe_seen")).drop("__maybe_seen", "__bucket")
     val survivors = candidates.join(exactSeen.select(col(hashCol)), Seq(hashCol), "left_anti")
     definitelyNew.unionByName(survivors)
   }

@@ -51,7 +51,7 @@ object ExplainPlans {
     val (nowNarrow, _) = graft.sched.Scheduler.scheduleRoundNarrow(
       pendingWide, graft.gen.Synthetic.robots(spark).toDF(),
       graft.gen.Synthetic.budgets(spark, 100).toDF(),
-      seenNarrow, 2000, 100, 8)
+      graft.seen.UrlSeen.antiJoin(_, seenNarrow, "url_hash", 2000), 100, 8)
     dump("NARROW-shuffle scheduling round (engine/bench path)",
       "Expect: every Exchange between the robots fold and the final rejoin " +
         "carries only (url_hash, host, depth, host_rank, discovered_seq, " +

@@ -10,20 +10,13 @@ import org.apache.spark.sql.Dataset
   */
 final class CacheScope {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-  private val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
   /** Record an already-persisted frame for later release. Returns it. */
   def track[T <: Dataset[_]](d: T): T = synchronized { frames += d; d }
 
-  /** Run `release` at `unpersistAll` — for cached state that is not a
-    * Dataset (a pinned sketch RDD). */
-  def onRelease(release: () => Unit): Unit = synchronized { releases += release; () }
-
   def unpersistAll(blocking: Boolean = false): Unit = synchronized {
     frames.foreach(_.unpersist(blocking))
     frames.clear()
-    releases.foreach(_())
-    releases.clear()
   }
 }
 

@@ -34,4 +34,24 @@ class CacheScopeQueriesSpec extends SparkTestBase {
         s"$name leaked ${leaked.size} cached RDD(s): ${leaked.map(_.name).mkString(", ")}")
     }
   }
+
+  test("unscoped q_seen_antijoin_cuckoo leaves no pinned RDD behind") {
+    // the unscoped catalog entry (what Verify/Bench/TimeQuery run) has only
+    // the session-wide clearCache() to release with: a pinned sketch RDD is
+    // a plain RDD persist that clearCache() does not reach. The results are
+    // kept, as a caller holding them would: that keeps every RDD of their
+    // lineage reachable, so a leaked persist cannot vanish by GC either.
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val kept = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val after = (1 to 3).map { _ =>
+      val df = SparkEntry.queries("q_seen_antijoin_cuckoo")(spark, sfDir)
+      kept += df
+      assert(df.queryExecution.toRdd.count() > 0)
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.size
+    }
+    assert(after.forall(_ <= before), s"persistent RDDs: $before before, $after after each run")
+  }
 }

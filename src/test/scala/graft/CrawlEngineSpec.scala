@@ -173,46 +173,49 @@ class CrawlEngineSpec extends SparkTestBase {
     }
   }
 
-  test("partitioned Bloom seen gate LIVE through the engine: full drain + " +
-    "torn-round resume equal the broadcast-path run exactly") {
+  test("sketch seen gate LIVE above the broadcast limit: drain + torn resume exact") {
     import spark.implicits._
-    // VERDICT r04 #3: UrlSeenSpec proves the partitioned build standalone
-    // and CrawlEngineSpec proves kill/resume under the broadcast gate — this
-    // composes them: every round's seen anti-join runs the executor-built
-    // cogrouped-Bloom path (forcePartitionedSeen; production dispatches at
-    // 8M seen via the manifest rowCount), through schedule -> fetch ->
+    // UrlSeenSpec proves the executor-built sketch gate standalone and
+    // CrawlEngineSpec proves kill/resume under the broadcast gate — this
+    // composes them: with the broadcast limit at -1 every round's seen
+    // anti-join runs the pinned cuckoo sketch (production dispatches on the
+    // Bloom's size from the manifest rowCount), through schedule -> fetch ->
     // sinks -> commit -> torn-round resume.
     val pages = Synthetic.pages(spark, PagesN, 4).toDF()
     val robots = Synthetic.robots(spark).toDF()
     val budgets = Synthetic.budgets(spark, Budget).toDF()
-    // full drain under the partitioned gate
-    val dirA = freshDir()
-    val eA = new CrawlEngine(spark, dirA, numPartitions = 8, defaultBudget = Budget,
-      maxAttempts = MaxAttempts, forcePartitionedSeen = true)
-    eA.init(Synthetic.frontier(spark, N, 4).toDF())
-    var last = -1L
-    var r = 0
-    while (last != 0 && r < 100) { last = eA.runRound(pages, robots, budgets); r += 1 }
-    assert(schedule(eA) == schedule(engine8), "partitioned-gate schedule")
-    assert(eA.seenTable.read().get.as[Long].collect().toSet == oracle._2, "partitioned-gate seen")
-    // torn round under the partitioned gate (kill after the seen append,
-    // the tear point that corrupts the gate's own input if resume is wrong)
-    val dirB = freshDir()
-    val eB = new CrawlEngine(spark, dirB, numPartitions = 8, defaultBudget = Budget,
-      maxAttempts = MaxAttempts, forcePartitionedSeen = true)
-    eB.init(Synthetic.frontier(spark, N, 4).toDF())
-    eB.runRound(pages, robots, budgets)
-    eB.crashAfterCommit = 2
-    intercept[RuntimeException] { eB.runRound(pages, robots, budgets) }
-    eB.crashAfterCommit = -1
-    val eB2 = new CrawlEngine(spark, dirB, numPartitions = 8, defaultBudget = Budget,
-      maxAttempts = MaxAttempts, forcePartitionedSeen = true)
-    assert(eB2.readCheckpoint().get.round == 1)
-    last = -1L; r = 0
-    while (last != 0 && r < 100) { last = eB2.runRound(pages, robots, budgets); r += 1 }
-    assert(schedule(eB2) == schedule(engine8), "partitioned-gate torn-round schedule")
-    assert(eB2.seenTable.read().get.as[Long].collect().toSet == oracle._2,
-      "partitioned-gate torn-round seen")
+    // the reference run is built first, under the default limit
+    val want = schedule(engine8)
+    withBroadcastLimit("-1") {
+      // full drain under the sketch gate
+      val dirA = freshDir()
+      val eA = new CrawlEngine(spark, dirA, numPartitions = 8, defaultBudget = Budget,
+        maxAttempts = MaxAttempts)
+      eA.init(Synthetic.frontier(spark, N, 4).toDF())
+      var last = -1L
+      var r = 0
+      while (last != 0 && r < 100) { last = eA.runRound(pages, robots, budgets); r += 1 }
+      assert(schedule(eA) == want, "sketch-gate schedule")
+      assert(eA.seenTable.read().get.as[Long].collect().toSet == oracle._2, "sketch-gate seen")
+      // torn round under the sketch gate (kill after the seen append, the
+      // tear point that corrupts the gate's own input if resume is wrong)
+      val dirB = freshDir()
+      val eB = new CrawlEngine(spark, dirB, numPartitions = 8, defaultBudget = Budget,
+        maxAttempts = MaxAttempts)
+      eB.init(Synthetic.frontier(spark, N, 4).toDF())
+      eB.runRound(pages, robots, budgets)
+      eB.crashAfterCommit = 2
+      intercept[RuntimeException] { eB.runRound(pages, robots, budgets) }
+      eB.crashAfterCommit = -1
+      val eB2 = new CrawlEngine(spark, dirB, numPartitions = 8, defaultBudget = Budget,
+        maxAttempts = MaxAttempts)
+      assert(eB2.readCheckpoint().get.round == 1)
+      last = -1L; r = 0
+      while (last != 0 && r < 100) { last = eB2.runRound(pages, robots, budgets); r += 1 }
+      assert(schedule(eB2) == want, "sketch-gate torn-round schedule")
+      assert(eB2.seenTable.read().get.as[Long].collect().toSet == oracle._2,
+        "sketch-gate torn-round seen")
+    }
   }
 
   test("a round releases only its own caches — an unrelated cached frame survives") {

@@ -42,7 +42,7 @@ class SchedulerSpec extends SparkTestBase {
     val budgets = Synthetic.budgets(spark, 30).toDF()
 
     val (narrowNow, narrowDef) = Scheduler.scheduleRoundNarrow(
-      pending, robots, budgets, seen, expectedSeen = 1000,
+      pending, robots, budgets, UrlSeen.antiJoin(_, seen, "url_hash", expectedSeen = 1000),
       defaultBudget = 30, numPartitions = 8)
     // wide straight-line: robots -> dedup window -> exact anti-join -> budget
     // -> order, all on full rows

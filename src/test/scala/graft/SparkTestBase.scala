@@ -18,6 +18,16 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(p, new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")))
   }
+
+  /** Runs `body` with Spark's broadcast limit
+    * (`spark.sql.autoBroadcastJoinThreshold`) at `limit`, then restores it:
+    * the session is shared by every suite. */
+  protected def withBroadcastLimit[T](limit: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, limit)
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkTestBase {

@@ -25,42 +25,23 @@ class UrlSeenSpec extends SparkTestBase {
     assert(UrlSeen.antiJoin(frontier, empty, "url_hash", 0).count() == frontier.count())
   }
 
-  test("PARTITIONED bloom gate identical to plain exact anti-join") {
+  test("above the broadcast limit the sketch gate equals plain exact anti-join") {
     import spark.implicits._
+    import org.apache.spark.util.sketch.BloomFilter
     val frontier = Synthetic.frontier(spark, 1200, 4).toDF()
     val seen = frontier.filter(col("url_hash") % 3 === 0).select("url_hash")
     val seenN = seen.count()
-    val viaPart = UrlSeen.antiJoin(frontier, seen, "url_hash", seenN, 0.05,
-        forcePartitioned = true)
-      .select("url_hash").as[Long].collect().sorted.toSeq
+    val bloomBytes = BloomFilter.optimalNumOfBits(seenN, 0.05) / 8
+    def gate(limit: Long) = withBroadcastLimit(limit.toString)(
+      UrlSeen.antiJoin(frontier, seen, "url_hash", seenN, 0.05))
+    // a Bloom exactly at the limit is broadcast, one byte over it is not
+    assert(gate(bloomBytes).queryExecution.analyzed.toString.contains("bloom_might_contain"))
+    val viaSketch = gate(bloomBytes - 1)
+    assert(!viaSketch.queryExecution.analyzed.toString.contains("bloom_might_contain"))
     val exact = UrlSeen.exactAntiJoin(frontier, seen, "url_hash")
       .select("url_hash").as[Long].collect().sorted.toSeq
-    assert(viaPart == exact)
+    assert(viaSketch.select("url_hash").as[Long].collect().sorted.toSeq == exact)
     spark.catalog.clearCache()
-  }
-
-  test("partitioned blooms: per-bucket executor aggregation, no driver merge, prunes well") {
-    import graft.seen.BloomAgg
-    import org.apache.spark.util.sketch.BloomFilter
-    val seen = spark.range(0, 20000).select(xxhash64(col("id")).as("url_hash"))
-    val blooms = seen
-      .repartition(8, pmod(col("url_hash"), lit(8)).cast("int"))
-      .groupBy(pmod(col("url_hash"), lit(8)).cast("int").as("bucket"))
-      .agg(BloomAgg.bloomAgg(col("url_hash"), 20000 / 8, 0.03).as("bloom"))
-      .collect()
-    assert(blooms.length == 8)
-    val filters = blooms.map(r => r.getInt(0) ->
-      BloomFilter.readFrom(new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))).toMap
-    // no false negatives: every seen hash hits its bucket's filter
-    val seenHashes = seen.collect().map(_.getLong(0))
-    seenHashes.foreach { h =>
-      val b = ((h % 8) + 8) % 8
-      assert(filters(b.toInt).mightContainLong(h), s"false negative for $h")
-    }
-    // prunes: fresh hashes mostly rejected by their bucket's filter
-    val fresh = (500000L until 501000L).map(graft.gen.Synthetic.mix)
-    val falsePos = fresh.count(h => filters((((h % 8) + 8) % 8).toInt).mightContainLong(h))
-    assert(falsePos < 100, s"false-positive rate too high: $falsePos/1000")
   }
 
   test("a NULL url_hash is definitely new in every seen gate (== exact anti-join)") {
@@ -82,8 +63,8 @@ class UrlSeenSpec extends SparkTestBase {
       UrlSeen.buildCuckooFilters(seen, "url_hash", seenN, b), b, math.max(seenN / b, 1L))
     val gates: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "broadcast bloom" -> (() => UrlSeen.antiJoin(frontier, seen, "url_hash", seenN, scope = scope)),
-      "partitioned bloom" -> (() => UrlSeen.antiJoin(frontier, seen, "url_hash", seenN,
-        forcePartitioned = true, scope = scope)),
+      "sketch above the broadcast limit" -> (() => withBroadcastLimit("-1")(
+        UrlSeen.antiJoin(frontier, seen, "url_hash", seenN, scope = scope))),
       "cuckoo" -> (() => UrlSeen.antiJoinCuckoo(frontier, seen, seen.limit(0), "url_hash", seenN,
         scope = scope)),
       "pinned sketch" -> (() => SketchHandle.gate(frontier, handle, seen, "url_hash", scope)))
